@@ -38,9 +38,57 @@ BAND_KEY_MOD = 9007199254740881
 SIMHASH_BITS = 32
 
 
+MAX_PERMUTATIONS = 256  # minhash_plan's max_perm: the widest signature
+# fixed: a new seed re-signs every store (AdmissionStore's scheme
+# marker then refuses the old ones)
+_PERM_SEED = 0x636F636F61
+
+
+def _perm_table(n: int) -> tuple[tuple[int, int], ...]:
+    """``n`` universal-hash coefficient pairs drawn from a SplitMix64
+    stream (fully specified, so the table is the same on every Python):
+    ``a ∈ [1, p)`` distinct, ``b ∈ [0, p)`` with p = HASH_MOD."""
+    mask = (1 << 64) - 1
+    state = _PERM_SEED
+
+    def draw() -> int:
+        nonlocal state
+        state = (state + 0x9E3779B97F4A7C15) & mask
+        z = state
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & mask
+        return z ^ (z >> 31)
+
+    table, seen = [], set()
+    while len(table) < n:
+        a, b = 1 + draw() % (HASH_MOD - 1), draw() % HASH_MOD
+        if a not in seen:
+            seen.add(a)
+            table.append((a, b))
+    return tuple(table)
+
+
+_PERMS = _perm_table(MAX_PERMUTATIONS)
+
+
 def perm_params(i: int) -> tuple[int, int]:
-    """Deterministic MinHash permutation coefficients (odd a, spread b)."""
-    return 2 * i + 1, 97 * i + 13
+    """Coefficients ``(a_i, b_i)`` of MinHash permutation ``i``:
+    h ↦ (a_i·h + b_i) mod p over the token-hash field p = HASH_MOD.
+
+    The a_i are spread over the whole field, so the map wraps mod p even
+    for short tokens (whose polynomial hashes are tiny: "a" = 97) and each
+    permutation is an independent draw from the 2-universal family — the
+    stand-in for independent random permutations that
+    ``minhash_collision_prob`` assumes. Small a would keep the order of
+    small hashes in every permutation, making one short frequent token the
+    minimum of every signature slot and every doc sharing it a candidate.
+    ``a_i < p`` and ``b_i < p`` keep a·h + b < p² < 2^63 for any h < p, so
+    neither Spark's long arithmetic nor DuckDB's BIGINT can overflow."""
+    if not 0 <= i < MAX_PERMUTATIONS:
+        raise ValueError(
+            f"permutation index {i} outside [0, {MAX_PERMUTATIONS})"
+        )
+    return _PERMS[i]
 
 
 def distinct_tokens(col: Column | str) -> Column:
@@ -324,7 +372,7 @@ def minhash_plan(
     recall_floor: float = 0.9,
     max_candidate_rate: float = 0.05,
     reject_below: float | None = None,
-    max_perm: int = 256,
+    max_perm: int = MAX_PERMUTATIONS,
     max_band_size: int = 32,
 ) -> dict:
     """(n_perm, band_size) planner for the banded-MinHash joins — the
@@ -425,8 +473,9 @@ def resolve_minhash_params(
     )
     if not plan["feasible"]:
         raise ValueError(
-            f"no (n_perm <= 256, band_size <= 32) honors recall_floor="
-            f"{recall_floor} with max_candidate_rate={max_candidate_rate} "
+            f"no (n_perm <= {MAX_PERMUTATIONS}, band_size <= 32) honors "
+            f"recall_floor={recall_floor} with "
+            f"max_candidate_rate={max_candidate_rate} "
             f"at threshold {threshold}; closest: {plan['closest']}"
         )
     return plan["n_perm"], plan["band_size"]
@@ -456,9 +505,11 @@ def minhash_candidates(
     materializes O(collisions) rows, and 8-byte longs vs ~40-char strings
     is a large cut in bytes shuffled through the widest stage of the whole
     dedup pipeline (measured 64× candidate volume at 8× scale — the join
-    IS the cost). The fold ``acc = (acc·31 + sig) mod 9007199254740881``
-    stays exactly representable in int64 (acc < 9.01e15 → acc·31 + 1e9 <
-    2.8e17) and is mirrored verbatim in the DuckDB oracle, so a key
+    IS the cost; measured before ``perm_params`` spread its coefficients,
+    when banding emitted near all pairs). The fold
+    ``acc = (acc·31 + sig) mod 9007199254740881`` stays exactly
+    representable in int64 (acc < 9.01e15 → acc·31 + 1e9 < 2.8e17) and
+    is mirrored verbatim in the DuckDB oracle, so a key
     collision (~1.4e-6 at 10⁵ keys) produces the SAME spurious candidate
     in both engines and the exact-Jaccard verify filters it identically —
     zero cross-engine divergence."""
@@ -1283,8 +1334,9 @@ def _verify_pairs_jaccard(
     measured strictly worse (sf0.1 dedup_minhash 26.6 s vs 11.9 s
     without; wash at 64×): at t=0.8 only ~30% of banded candidates are
     size-incompatible, which does not pay for two extra candidate-set
-    shuffles. The bitmap route's intersect is integer ops; it never
-    prefilters.
+    shuffles. (These figures predate the spread ``perm_params``
+    coefficients: the candidate sets were then near all pairs.) The
+    bitmap route's intersect is integer ops; it never prefilters.
     """
     svocab = _bitmap_vocab(vocab_source)
     if svocab is not None:
@@ -1332,6 +1384,8 @@ def _verify_pairs_jaccard(
         # alternating fresh-JVM legs: 342/142 s with vs 520/310 s
         # without (tmpfs local-dir legs at this rung are noise — the
         # shuffle competes with the JVM heap for RAM; see PERF.md r6).
+        # Pre-fix evidence: measured while perm_params' small
+        # coefficients made banding emit near all pairs.
         na, nb = F.size("toks_a"), F.size("toks_b")
         cond = (
             F.least(na, nb) >= F.lit(threshold) * F.greatest(na, nb)

@@ -15,11 +15,11 @@ contract as the streaming covariance store). The d·w table (4×1024 by
 default, ~32 KB) is the state a 100 TB stream keeps per window, vs an
 unbounded exact key table.
 
-Hashes are the engine's deterministic integer permutations
-(``dedup.perm_params``-style odd-a/spread-b over the 1e9+7 prime), so
-the DuckDB oracle replays every cell exactly. Caller contract: the keyed
-column is a non-negative int64 well below 2^63/(2d+1) (no multiply
-overflow) — true for every fixture id column.
+Row i hashes with the MinHash permutation ``dedup.perm_params(i)``
+over the 1e9+7 prime: the key is reduced mod p first, so a·k + b < 2^63
+for any key and the rows are independent universal hashes (the e^−d
+bound needs that). The DuckDB oracle replays every cell exactly. Caller
+contract: the keyed column is a non-negative int64.
 """
 
 from __future__ import annotations
@@ -27,19 +27,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import perm_params
+from .text import HASH_MOD
+
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
-_MOD = 1_000_000_007
 
 
 def _bucket(col: Column, i: int, width: int) -> Column:
-    a, b = 2 * i + 1, 97 * i + 13
-    return F.pmod((col * F.lit(a) + F.lit(b)) % F.lit(_MOD), F.lit(width))
+    a, b = perm_params(i)
+    key = col.cast("long") % F.lit(HASH_MOD)
+    return F.pmod((key * F.lit(a) + F.lit(b)) % F.lit(HASH_MOD), F.lit(width))
 
 
 def _bucket_sql(expr: str, i: int, width: int) -> str:
-    a, b = 2 * i + 1, 97 * i + 13
-    return f"((({expr}) * {a} + {b}) % {_MOD}) % {width}"
+    a, b = perm_params(i)
+    key = f"CAST({expr} AS BIGINT) % {HASH_MOD}"
+    return f"((({key}) * {a} + {b}) % {HASH_MOD}) % {width}"
 
 
 def cms_build(

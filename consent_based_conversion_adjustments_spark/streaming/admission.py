@@ -56,6 +56,8 @@ between runs); the dedup store itself is the LLM-pipeline extension
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +65,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import dedup as D
+
+
+SCHEME_FILE = "_signature_scheme.json"
 
 
 def _with_epoch(schema: T.StructType) -> T.StructType:
@@ -215,6 +220,13 @@ class AdmissionStore:
     - ``token_hashes/`` — admitted docs' distinct token-hash sets
     - ``relations/``    — every (doc_id, dup_of, jaccard) rejection edge
 
+    plus ``_signature_scheme.json``, written with the first epoch: the
+    ``n_perm``, ``band_size`` and a digest of the ``dedup.perm_params``
+    coefficients every stored signature was made with. Signatures of
+    different schemes never agree on a band, so ``process_batch`` refuses
+    to probe a store whose marker differs from its own scheme, or that
+    has epochs but no marker.
+
     ``process_batch`` is the ``foreachBatch`` body; ``sink`` wires it to
     a streaming DataFrame. Output frames standardize on ``doc_id``
     whatever ``id_col`` is (the store tables key on it).
@@ -279,12 +291,61 @@ class AdmissionStore:
             .parquet(path)
         )
 
+    # -- signature scheme marker ---------------------------------------------
+
+    def _signature_scheme(self) -> dict:
+        """What makes this store's signatures comparable: the banding
+        shape and a digest of the permutation coefficients."""
+        perms = [D.perm_params(i) for i in range(self.n_perm)]
+        return {
+            "n_perm": self.n_perm,
+            "band_size": self.band_size,
+            "perm_digest": hashlib.sha256(
+                json.dumps(perms).encode()
+            ).hexdigest(),
+        }
+
+    def _check_scheme(self, spark: SparkSession) -> None:
+        """Compare the store's scheme marker with ours (filesystem calls
+        only, no Spark job); write it when the store is still empty."""
+        jvm = spark._jvm
+        marker = jvm.org.apache.hadoop.fs.Path(self.store_dir, SCHEME_FILE)
+        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+        want = self._signature_scheme()
+        if fs.exists(marker):
+            stream = fs.open(marker)
+            try:
+                got = json.loads(bytes(stream.readAllBytes()).decode())
+            finally:
+                stream.close()
+            if got != want:
+                raise RuntimeError(
+                    f"AdmissionStore at {self.store_dir} was signed with "
+                    f"{got}, this store object signs with {want}: the "
+                    "signatures are not comparable — rebuild the store "
+                    "under one scheme"
+                )
+            return
+        paths = (self.sigs_path, self.hashes_path, self.relations_path)
+        if any(_table_exists(spark, p) for p in paths):
+            raise RuntimeError(
+                f"AdmissionStore at {self.store_dir} holds epochs but no "
+                f"{SCHEME_FILE}: they were signed under an unknown scheme "
+                "— rebuild the store"
+            )
+        out = fs.create(marker, False)
+        try:
+            out.write(bytearray(json.dumps(want).encode()))
+        finally:
+            out.close()
+
     # -- the sink ------------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One admission round at ``epoch_id``: probe the store, write the
         epoch's relations and the admitted docs' (sigs, hashes) delta."""
         spark = batch_df.sparkSession
+        self._check_scheme(spark)
         # tokenize/sign the batch exactly once (shared with the verify)
         new_sigs, new_hashes = D.minhash_store(
             batch_df, self.text_col, self.id_col, self.n_perm

@@ -192,6 +192,9 @@ def test_cms_estimate_never_underestimates_and_matches_manual(spark):
     python build bit-for-bit."""
     from collections import Counter
 
+    from consent_based_conversion_adjustments_spark.operators.dedup import (
+        perm_params,
+    )
     from consent_based_conversion_adjustments_spark.operators.sketches import (
         CMS_DEPTH,
         cms_build,
@@ -209,7 +212,8 @@ def test_cms_estimate_never_underestimates_and_matches_manual(spark):
     mod = 1_000_000_007
 
     def bucket(k, i):
-        return ((k * (2 * i + 1) + 97 * i + 13) % mod) % width
+        a, b = perm_params(i)
+        return (((k % mod) * a + b) % mod) % width
 
     cells = Counter()
     for k in keys:
@@ -225,3 +229,27 @@ def test_cms_estimate_never_underestimates_and_matches_manual(spark):
         assert est >= tn
         manual = min(cells[(i, bucket(k, i))] for i in range(CMS_DEPTH))
         assert est == manual
+
+
+def test_cms_rows_separate_keys_one_width_apart(spark):
+    """Count-Min rows must be independent hashes: keys k and k + width
+    may share a bucket in some rows, never in all of them (else depth d
+    gives one row's error bound). Keys are reduced mod p before the
+    multiply, so keys near 2^62 hash without long overflow."""
+    from consent_based_conversion_adjustments_spark.operators.sketches import (
+        CMS_DEPTH,
+        CMS_WIDTH,
+        _bucket,
+    )
+
+    base = list(range(64)) + [2**62 + k for k in range(8)]
+    keys = base + [k + CMS_WIDTH for k in base]
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    rows = df.select(
+        "k", *[_bucket(F.col("k"), i, CMS_WIDTH).alias(f"b{i}")
+               for i in range(CMS_DEPTH)]
+    ).collect()
+    got = {r["k"]: tuple(r[f"b{i}"] for i in range(CMS_DEPTH)) for r in rows}
+    for k in base:
+        assert got[k] != got[k + CMS_WIDTH], k
+    assert all(0 <= b < CMS_WIDTH for bs in got.values() for b in bs)

@@ -1364,6 +1364,48 @@ def test_minhash_candidates_exactly_once_and_reference_set(spark, docs_df):
     assert set(pairs) == expected
 
 
+def test_perm_params_spread_and_overflow_safe():
+    """MinHash permutations are universal hashes over p = HASH_MOD: a in
+    [1, p) pairwise distinct, b in [0, p), and the worst case a·(p−1) + b
+    still fits int64 (Spark long / DuckDB BIGINT never overflow)."""
+    p = X.HASH_MOD
+    perms = [D.perm_params(i) for i in range(D.MAX_PERMUTATIONS)]
+    assert all(1 <= a < p and 0 <= b < p for a, b in perms)
+    assert len({a for a, _ in perms}) == len(perms)
+    assert max((p - 1) * a + b for a, b in perms) < 2**63
+    with pytest.raises(ValueError):
+        D.perm_params(D.MAX_PERMUTATIONS)
+
+
+def test_minhash_banding_short_token_corpus_is_not_all_pairs(spark):
+    """Every doc shares the short frequent tokens "a", "the", "w0" (tiny
+    polynomial hashes). Independent permutations must still give each
+    doc its own minima: banding emits far fewer than all pairs of the
+    unrelated docs and finds every planted near-copy (J ≥ 0.95, S-curve
+    candidacy ≥ 0.998 each)."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"tok{k}" for k in range(2000)]
+    docs = []
+    for i in range(120):
+        body = rng.sample(vocab, 20)
+        docs.append((i, " ".join(["a", "the", "w0"] + body)))
+    planted = set()
+    for j, i in enumerate(range(0, 120, 20)):
+        docs.append((1000 + j, docs[i][1] + " extra"))  # J = 23/24
+        planted.add((i, 1000 + j))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sigs = D.minhash_signatures(df, "text", "doc_id")
+    cands = {
+        (r["doc_a"], r["doc_b"])
+        for r in D.minhash_candidates(sigs).collect()
+    }
+    n = len(docs)
+    assert len(cands) <= 0.05 * n * (n - 1) / 2
+    assert planted <= cands
+
+
 def test_banded_cross_cands_fused_legs_match_separate(spark, docs_df):
     """The fused store+mates leg union (r13) must equal the two legs run
     separately — including per-leg exactly-once multiplicity."""

@@ -628,6 +628,54 @@ def test_admission_store_replay_idempotent(spark, tmp_path):
     assert _store_state(spark, store) == before
 
 
+def test_admission_store_refuses_mixed_signature_schemes(spark, tmp_path):
+    """Signatures from different (n_perm, band_size, coefficients) never
+    share a band, so probing such a store would silently miss every
+    near-dup: process_batch must raise instead — on a scheme marker that
+    differs from the store object's, and on epochs with no marker."""
+    import json
+    import os
+
+    from consent_based_conversion_adjustments_spark.streaming.admission import (
+        SCHEME_FILE,
+        AdmissionStore,
+    )
+
+    batches = _admission_batches(spark)
+    path = str(tmp_path / "store")
+    store = AdmissionStore(path, threshold=ADM_THRESHOLD)
+    store.process_batch(batches[0], 0)
+    marker = os.path.join(path, SCHEME_FILE)
+    with open(marker) as f:
+        scheme = json.load(f)
+    # the local Hadoop FS keeps a checksum beside the marker; edits below
+    # drop it, as a hand edit or an older writer would leave none
+    crc = os.path.join(path, f".{SCHEME_FILE}.crc")
+    assert scheme["n_perm"] == store.n_perm
+    assert scheme["band_size"] == store.band_size
+    store.process_batch(batches[1], 1)  # same scheme: accepted
+
+    wider = AdmissionStore(
+        path, threshold=ADM_THRESHOLD, n_perm=32, band_size=4
+    )
+    with pytest.raises(RuntimeError, match="rebuild the store"):
+        wider.process_batch(batches[2], 2)
+
+    if os.path.exists(crc):
+        os.remove(crc)
+    with open(marker, "w") as f:  # same shape, other coefficients
+        json.dump({**scheme, "perm_digest": "0" * 64}, f)
+    with pytest.raises(RuntimeError, match="rebuild the store"):
+        store.process_batch(batches[2], 2)
+
+    os.remove(marker)  # epochs written before markers existed
+    with pytest.raises(RuntimeError, match="rebuild the store"):
+        store.process_batch(batches[2], 2)
+    assert {r["admit_batch_id"] for r in store.admitted(spark).collect()} <= {
+        0, 1
+    }
+
+
 def test_admission_store_compaction_preserves_probe_results(
     spark, tmp_path
 ):
