@@ -253,7 +253,6 @@ def benford_audit(df: DataFrame, col: str) -> DataFrame:
 def table_profile(
     df: DataFrame,
     cols: list[str] | None = None,
-    approximate_distinct: bool = False,
 ) -> DataFrame:
     """One-call table profile (the ANALYZE-TABLE statistic set): per
     column — row count, nulls, EXACT distinct count, min/max, and the
@@ -271,12 +270,8 @@ def table_profile(
     1-row result explodes in-plan to tidy per-column rows.
 
     The EXACT count-distincts are the profile's dominant cost (the r8c
-    rung: 7.6x at 64x, all of it the Expand + distinct aggs) — at true
-    scale pass ``approximate_distinct=True`` to swap in
-    ``approx_count_distinct`` (HLL++, one ordinary aggregate, no
-    Expand); the oracle-checked query stays exact, the production call
-    takes the sketch, the same exact/approx split as the distinct-count
-    cube.
+    rung: 7.6x at 64x, all of it the Expand + distinct aggs;
+    tools/scale/results_r8c.json, PERF.md round 8c).
     """
     from ..functions.rounding import stable_round
     from ..sources.io import parallelize_scan
@@ -302,11 +297,7 @@ def table_profile(
         aggs += [
             F.count(col).alias(f"__n_{i}"),
             F.count(F.when(col.isNull(), 1)).alias(f"__null_{i}"),
-            (
-                F.approx_count_distinct(col)
-                if approximate_distinct
-                else F.countDistinct(col)
-            ).alias(f"__d_{i}"),
+            F.countDistinct(col).alias(f"__d_{i}"),
         ]
         if c in numeric:
             aggs += [

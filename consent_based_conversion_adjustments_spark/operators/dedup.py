@@ -18,8 +18,6 @@ every stage has an exact DuckDB oracle twin.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -960,14 +958,6 @@ def _admit_relations_collapsed(
     return rel, rejected_new, sc
 
 
-def _ADMIT_CKPT_STRATEGY() -> str:
-    """Per-round store-checkpoint strategy: "delta" (r14 default — one
-    O(batch) wide delta checkpoint) or "full" (pre-r14 full-union
-    rewrite, kept for reproducible A/Bs via ``COCOA_ADMIT_CKPT=full``).
-    Read per call so a harness can flip it without re-importing."""
-    return os.environ.get("COCOA_ADMIT_CKPT", "delta")
-
-
 def admit_batch(
     new: DataFrame,
     store_sigs: DataFrame,
@@ -977,7 +967,6 @@ def admit_batch(
     threshold: float = 0.6,
     n_perm: int = N_PERMUTATIONS,
     band_size: int = BAND_SIZE,
-    checkpoint_store: bool = True,
     collapse_identical: bool | str = "auto",
     store_identity_dups: bool | None = None,
     class_state: dict | None = None,
@@ -998,33 +987,28 @@ def admit_batch(
     frames are appended to the persisted store tables — everything here
     is id-keyed equi-joins, so the store can be arbitrarily large.
 
-    ``checkpoint_store`` (default True) eagerly cuts the returned
-    frames' lineage and releases the batch's transient sig/hash caches.
-    Without it, in-session chaining across rounds degrades
-    superlinearly: each round's store is lazy union + anti-join lineage
-    over the previous round's, so every one of the next round's band
-    joins would recompute the whole prior chain. Since r14 the eager
-    write is the admitted DELTA only — ONE wide ``(doc_id, tok_hashes,
-    sig_*)`` localCheckpoint per round, O(batch) — and the returned
-    store frames are ``store ∪ delta_ckpt`` column views. The r6
-    measurement that justified checkpointing the FULL union (882/867 s
-    vs 1382/1127 s at the 64× rung, PERF.md round 6) predates the
-    exploded single-shuffle banding: the store was then re-scanned ~19×
-    per round (16 band joins + verify attaches + vocab probe), and one
-    compact copy beat re-reading the union's spilled cache legs that
-    many times. After r13's banding fusion the store is scanned ~4×
-    per round and the r14 re-measurement inverts the verdict (organic
-    sf1.0 admission rung + local A/B recorded in OPTIMIZATION_r14.md);
-    the O(store)-per-round checkpoint write was the admission
-    pipeline's only remaining superlinear-at-depth cost. Scan legs grow
-    by one per in-session round — callers chaining MANY rounds should
-    still flush to tables (`streaming.admission`), where parquet
-    appends give the O(batch) write AND compact scans.
-    ``COCOA_ADMIT_CKPT=full`` restores the full-union strategy (the
-    reproducible A/B lever; results are identical either way). Pass
-    False only when the caller immediately writes the returned frames
-    out (the production path — the table write itself is the
-    checkpoint).
+    The returned frames' lineage is cut eagerly and the batch's
+    transient sig/hash caches are released. Without the cut, in-session
+    chaining across rounds degrades superlinearly: each round's store is
+    lazy union + anti-join lineage over the previous round's, so every
+    one of the next round's band joins would recompute the whole prior
+    chain. Since r14 the eager write is the admitted DELTA only — ONE
+    wide ``(doc_id, tok_hashes, sig_*)`` localCheckpoint per round,
+    O(batch) — and the returned store frames are ``store ∪ delta_ckpt``
+    column views. The r6 measurement that justified checkpointing the
+    FULL union (882/867 s vs 1382/1127 s at the 64× rung, PERF.md round
+    6) predates the exploded single-shuffle banding: the store was then
+    re-scanned ~19× per round (16 band joins + verify attaches + vocab
+    probe), and one compact copy beat re-reading the union's spilled
+    cache legs that many times. After r13's banding fusion the store is
+    scanned ~4× per round and the r14 re-measurement inverts the verdict
+    (organic sf1.0 admission rung + local A/B recorded in
+    OPTIMIZATION_r14.md and tools/scale/results_admission_ckpt_r14.json);
+    the O(store)-per-round checkpoint write was the admission pipeline's
+    only remaining superlinear-at-depth cost. Scan legs grow by one per
+    in-session round — callers chaining MANY rounds should still flush
+    to tables (`streaming.admission`), where parquet appends give the
+    O(batch) write AND compact scans.
 
     ``collapse_identical`` ("auto" default, the minhash_neardup r12
     precedent): when either side carries exact token-set duplicate mass
@@ -1061,9 +1045,8 @@ def admit_batch(
     re-aggregated and re-checkpointed from the full store each round
     (the dominant per-round write at depth: 1.6 GB/round measured at
     the organic sf1.0 rung). Managed entirely inside admit_batch; the
-    entry is dropped whenever a round leaves it unmaintainable (direct
-    route, checkpoint_store=False, or the "full" checkpoint strategy),
-    and the next collapsed round re-seeds it with one store agg.
+    entry is dropped whenever a round takes the direct route, and the
+    next collapsed round re-seeds it with one store agg.
     Results are identical with or without it (pinned by pytest)."""
     new_sigs, new_hashes = minhash_store(new, text_col, id_col, n_perm)
     route_collapsed = collapse_identical
@@ -1107,64 +1090,44 @@ def admit_batch(
     rejected = rejected_new.unionByName(store_sigs.select("doc_id"))
     delta_sigs = new_sigs.join(rejected, "doc_id", "left_anti")
     delta_hashes = new_hashes.join(rejected, "doc_id", "left_anti")
-    if checkpoint_store:
-        # eager: the collapsed route already checkpointed its class-level
-        # state (relations stay a LAZY expansion over it — materializing
-        # the member-level frame per round was the dominant residual cost
-        # on duplicate-rich corpora); the direct route's member-level
-        # relations must materialize BEFORE the batch caches are released
-        # (both store updates and relations read them).
-        if not route_collapsed:
-            relations = relations.localCheckpoint()
-        if _ADMIT_CKPT_STRATEGY() == "full":
-            # pre-r14 strategy, kept as the A/B lever (see docstring)
-            updated_sigs = store_sigs.unionByName(delta_sigs).localCheckpoint()
-            updated_hashes = store_hashes.unionByName(
-                delta_hashes
-            ).localCheckpoint()
-        else:
-            # ONE O(batch) eager write per round: the admitted delta's
-            # sig and hash rows share the doc_id key, so a single wide
-            # checkpoint replaces two store-sized ones; the returned
-            # frames are column views over (store ∪ delta) — the store
-            # legs are the caller's already-materialized state and are
-            # never rewritten.
-            delta = delta_hashes.join(delta_sigs, "doc_id").localCheckpoint()
-            sig_cols = [c for c in new_sigs.columns if c != "doc_id"]
-            updated_sigs = store_sigs.unionByName(
-                delta.select("doc_id", *sig_cols)
+    # eager: the collapsed route already checkpointed its class-level
+    # state (relations stay a LAZY expansion over it — materializing the
+    # member-level frame per round was the dominant residual cost on
+    # duplicate-rich corpora); the direct route's member-level relations
+    # must materialize BEFORE the batch caches are released (both store
+    # updates and relations read them).
+    if not route_collapsed:
+        relations = relations.localCheckpoint()
+    # ONE O(batch) eager write per round: the admitted delta's sig and
+    # hash rows share the doc_id key, so a single wide checkpoint
+    # replaces two store-sized ones; the returned frames are column views
+    # over (store ∪ delta) — the store legs are the caller's
+    # already-materialized state and are never rewritten.
+    delta = delta_hashes.join(delta_sigs, "doc_id").localCheckpoint()
+    sig_cols = [c for c in new_sigs.columns if c != "doc_id"]
+    updated_sigs = store_sigs.unionByName(delta.select("doc_id", *sig_cols))
+    updated_hashes = store_hashes.unionByName(
+        delta.select("doc_id", "tok_hashes")
+    )
+    if class_state is not None and route_collapsed:
+        # invariant-maintained store class dictionary (see
+        # _admit_relations_collapsed): admitted docs are always singleton
+        # classes, so next round's store side is a lazy column view over
+        # this round's delta checkpoint — the per-round O(store) class
+        # agg + checkpoint never recurs once the seed round paid it
+        class_state["store_classes"] = store_cls.unionByName(
+            delta.select(
+                "tok_hashes",
+                "doc_id",
+                F.array("doc_id").alias("members"),
             )
-            updated_hashes = store_hashes.unionByName(
-                delta.select("doc_id", "tok_hashes")
-            )
-            if class_state is not None and route_collapsed:
-                # invariant-maintained store class dictionary (see
-                # _admit_relations_collapsed): admitted docs are always
-                # singleton classes, so next round's store side is a
-                # lazy column view over this round's delta checkpoint —
-                # the per-round O(store) class agg + checkpoint never
-                # recurs once the seed round paid it
-                class_state["store_classes"] = store_cls.unionByName(
-                    delta.select(
-                        "tok_hashes",
-                        "doc_id",
-                        F.array("doc_id").alias("members"),
-                    )
-                )
-        new_sigs.unpersist()
-        new_hashes.unpersist()
-    else:
-        updated_sigs = store_sigs.unionByName(delta_sigs)
-        updated_hashes = store_hashes.unionByName(delta_hashes)
-    if class_state is not None and "store_classes" in class_state and (
-        not route_collapsed
-        or not checkpoint_store
-        or _ADMIT_CKPT_STRATEGY() == "full"
-    ):
-        # the maintained dictionary is only valid when this round both
-        # took the collapsed route AND checkpointed its delta — anything
-        # else leaves the state stale, so drop it (next round re-seeds)
-        del class_state["store_classes"]
+        )
+    elif class_state is not None:
+        # the direct route leaves the maintained dictionary stale, so
+        # drop it (the next collapsed round re-seeds it)
+        class_state.pop("store_classes", None)
+    new_sigs.unpersist()
+    new_hashes.unpersist()
     return relations, updated_sigs, updated_hashes
 
 
@@ -1429,7 +1392,8 @@ def minhash_neardup(
     back to member pairs afterwards (output-bound). Byte-identical
     output; turns the banding join's Σ_class s² cost into Σ_class s, the
     difference between a crawl with 10% boilerplate grinding the band
-    shuffle and not noticing it (measured: tools/scale/hot_band_ab_r9).
+    shuffle and not noticing it (measured: PERF.md round 9,
+    tools/scale/results_hotband_r9.json).
 
     ``collapse_identical="auto"`` (the DEFAULT since round 12 — the
     choose_impl precedent applied to dedup): tokenize once, then ONE
@@ -1792,7 +1756,6 @@ def duplicate_spans(
     id_col: str,
     n: int = 3,
     min_count: int = 2,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans (the word-level analogue of
     Lee et al. 2022's suffix-array exact-substring dedup,
@@ -1820,21 +1783,18 @@ def duplicate_spans(
     corpus-wide shuffles are the shingle-hash agg and the doc_id window.
 
     The exploded positions feed both the dup-set agg and the marking
-    join; ``persist=True`` pins them (MEMORY_AND_DISK, minhash-table
-    convention — caller/bench hygiene unpersists) instead of
-    re-tokenizing the corpus for the second consumer — A/B at the 64×
-    rung: 89 s recompute vs 59 s persisted. At cluster scale the pin is
-    a disk-spill cost vs a second full tokenize pass; keep it unless
-    executor storage is the bottleneck.
+    join, so they are pinned (MEMORY_AND_DISK, minhash-table convention
+    — caller/bench hygiene unpersists) instead of re-tokenizing the
+    corpus for the second consumer — A/B at the 64× rung: 89 s recompute
+    vs 59 s persisted (PERF.md round 7). At cluster scale the pin is a
+    disk-spill cost vs a second full tokenize pass.
     """
     from .text import shingle_hashes
 
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(shingle_hashes(text_col, n)).alias("pos", "sh"),
-    )
-    if persist:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("__cnt"))
@@ -2078,7 +2038,6 @@ def triangle_counts(
     edges: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    orient_by_degree: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected edge list with
     ``a < b`` per row (the near-dup pair contract) — the standard
@@ -2097,9 +2056,7 @@ def triangle_counts(
     dup-dense corpus produces is the difference between Σ deg² wedge
     blowup and Σ outdeg² — measured at the 64× rung: the id-ordered
     variant burned >190 CPU-minutes without finishing; degree-ordered
-    completes in seconds-to-minutes (PERF.md). ``orient_by_degree=
-    False`` keeps the raw-id orientation for small graphs / A-B runs.
-    Results are orientation-invariant (same triangles either way).
+    completes in seconds-to-minutes (PERF.md).
 
     Cost shape: one degree agg + two degree-attach joins + one wedge
     self-join + one closing semi-join — all equi-joins on node keys.
@@ -2114,43 +2071,22 @@ def triangle_counts(
     ``triangle_counts_sampled`` (DOULION) or compute cohesion as
     component edge-density (|E| vs C(s,2) — linear)."""
     e0 = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    if orient_by_degree:
-        deg = (
-            e0.select(F.explode(F.array("a", "b")).alias("n"))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        ed = (
-            e0.join(
-                deg.select(
-                    F.col("n").alias("a"), F.col("d").alias("__da")
-                ),
-                "a",
-            )
-            .join(
-                deg.select(
-                    F.col("n").alias("b"), F.col("d").alias("__db")
-                ),
-                "b",
-            )
-        )
-        a_first = (F.col("__da") < F.col("__db")) | (
-            (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
-        )
-        e = ed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(a_first, F.col("__db")).otherwise(F.col("__da")).alias(
-                "__dv"
-            ),
-        )
-    else:
-        # raw-id orientation: a < b already holds
-        e = e0.select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            F.col("b").alias("__dv"),  # id doubles as the order key
-        )
+    deg = (
+        e0.select(F.explode(F.array("a", "b")).alias("n"))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    ed = e0.join(
+        deg.select(F.col("n").alias("a"), F.col("d").alias("__da")), "a"
+    ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("__db")), "b")
+    a_first = (F.col("__da") < F.col("__db")) | (
+        (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
+    )
+    e = ed.select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(a_first, F.col("__db")).otherwise(F.col("__da")).alias("__dv"),
+    )
     wedges = (
         e.alias("e1")
         .join(
@@ -2446,8 +2382,7 @@ def neardup_components(
 #: original edge set never touches the driver). 500k half edges is ~16 MB
 #: through Arrow and resolves in well under a second, the same budget
 #: class as a broadcast-join side; past it the distributed jump loop runs.
-#: Env-tunable for clusters where the driver is smaller or larger.
-CC_LOCAL_EDGE_BUDGET = int(os.environ.get("COCOA_CC_LOCAL_EDGES", "500000"))
+CC_LOCAL_EDGE_BUDGET = 500_000
 
 
 def _cc_union_find_local(spark, pdf) -> DataFrame:

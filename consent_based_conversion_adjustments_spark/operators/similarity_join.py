@@ -43,6 +43,16 @@ from ..functions.distance import metric_distance, parse_minkowski
 
 BUILD_FEATURES = "__build_features"
 DISTANCE = "distance"
+#: the physical routes ``similarity_join`` / ``run_adjustment`` accept;
+#: any other name would silently fall through to the O(m·n) sql plan
+IMPLS = ("auto", "sql", "numpy", "grouped", "lsh")
+
+
+def check_impl(impl: str) -> None:
+    if impl not in IMPLS:
+        raise ValueError(
+            f"unknown impl {impl!r}; expected one of {', '.join(IMPLS)}"
+        )
 
 
 def _build_side(build: DataFrame, build_id: str, features: str) -> DataFrame:
@@ -597,6 +607,7 @@ def similarity_join(
     requires ``feature_width``. Approximate (recall set by the LSH
     amplification), intended for build sides past the broadcast limit.
     """
+    check_impl(impl)
     if impl == "auto":
         impl, n_probe, n_build = resolve_auto_impl(
             probe, build, features, feature_width, n_probe, n_build
@@ -709,12 +720,11 @@ def auto_n_planes(
 
 
 #: Measured recall-vs-mass ledger from the 64× embeddings rung
-#: (128k build × 128k query — run_scale_r9.build_tiles(64) of the
-#: 2000-row sf0.1 table; tools/scale/run_lsh_recall_r10.py →
-#: results_lsh_recall_r10.json, PERF.md round 10). Ground truth = exact
-#: top-5 for a 500-probe sample. The calibration corpus has WEAK angular
-#: gaps (rotation-tiled synthetic vectors) — a regime unfavorable to
-#: angular LSH. Round 13 measured two MORE corpus classes at the same
+#: (128k build × 128k query — the 64× rotation tiling of the 2000-row
+#: sf0.1 table; tools/scale/results_lsh_recall_r10.json, PERF.md round
+#: 10). Ground truth = exact top-5 for a 500-probe sample. The
+#: calibration corpus has WEAK angular gaps (rotation-tiled synthetic
+#: vectors) — a regime unfavorable to angular LSH. Round 13 measured two MORE corpus classes at the same
 #: (p, t) grid and falsified recall transfer in BOTH directions (PERF.md
 #: round 13): a duplicate-rich organic corpus saturates recall
 #: (RECALL_LEDGER_ORGANIC_64X below, ≥0.99 everywhere) while the sparse
@@ -740,9 +750,10 @@ RECALL_LEDGER_64X: tuple[dict, ...] = (
 )
 
 #: Round-13 organic ledger: bootstrap-resample of the sf0.1 embeddings
-#: ×64 (sigma=0.01 jitter + renorm — the run_sf1_corpus_r12 recipe), the
-#: duplicate-rich regime the engine's own dedup/near-dup workloads live
-#: in (tools/scale/run_lsh_recall_r13.py → results_lsh_recall_r13.json).
+#: ×64 (sigma=0.01 jitter + renorm — the PERF.md round-12 organic
+#: recipe), the duplicate-rich regime the engine's own dedup/near-dup
+#: workloads live in (tools/scale/results_lsh_recall_r13.json, PERF.md
+#: round 13).
 #: Top-k neighbors are jittered near-copies, so they collide in nearly
 #: every table: recall saturates (the r1=1.0 rows invert to t=1 via the
 #: perfect-recall special case). A 512k validation leg reproduced the
@@ -806,8 +817,9 @@ def lsh_recall_plan(
     Per-table rates r₁/m₁ are averaged over the ledger rows at each
     measured p; p is NOT extrapolated (the p=12 row shows the signature
     explode + 65k-bucket overhead breaking the 1/2^p idealization). The
-    ledger corpus is the weak-angular-gap synthetic rung — re-measure
-    with tools/scale/run_lsh_recall_r10.py and pass ``ledger=`` for a
+    ledger corpus is the weak-angular-gap synthetic rung — measure the
+    actual corpus with ``lsh_recall_measured`` (the registered
+    ``cocoa_lsh_recall_audit`` query runs it) and pass ``ledger=`` for a
     corpus with real structure (recall per table will only improve).
 
     Returns a dict: ``route`` = "lsh" (+ n_planes/n_tables/
@@ -929,7 +941,6 @@ def lsh_recall_measured(
     n_planes: int,
     n_tables: int,
     sample_mod: int = 1,
-    self_join: bool = True,
     n_rows_hint: int | None = None,
 ) -> DataFrame:
     """In-corpus recall measurement — the enforcement half of the recall
@@ -942,11 +953,10 @@ def lsh_recall_measured(
     (distance, build_id)-tie-broken broadcast kernel) vs the
     (n_planes, n_tables) LSH top-k over a deterministic probe sample
     (``probe_id % sample_mod == 0`` — replayable in SQL), returning one
-    row ``(n_exact, hits)``. ``self_join=True`` (a corpus joined to
-    itself) ranks k+1 including the self pair and drops it, the
-    registered LSH queries' convention. Cost: sample_rows × n_build
-    exact distances + the sampled LSH legs — bounded by the sample, not
-    the corpus."""
+    row ``(n_exact, hits)``. The corpus is joined to itself: both legs
+    rank k+1 including the self pair and drop it, the registered LSH
+    queries' convention. Cost: sample_rows × n_build exact distances +
+    the sampled LSH legs — bounded by the sample, not the corpus."""
     if sample_mod > 1:
         sample = probe.filter(
             F.col(probe_id) % F.lit(int(sample_mod)) == 0
@@ -954,7 +964,7 @@ def lsh_recall_measured(
     else:
         sample = probe
     sample = sample.select(probe_id, features)
-    fetch = k + 1 if self_join else k
+    fetch = k + 1
     # impl="numpy": the chunked-BLAS kernel shares the dot-product
     # distance shape with knn_join_lsh's re-rank AND the oracle's
     # _EUCLID replay — one distance formulation across all three legs
@@ -968,9 +978,8 @@ def lsh_recall_measured(
         probe_id=probe_id, build_id=build_id, features=features,
         n_planes=n_planes, n_tables=n_tables, n_rows_hint=n_rows_hint,
     )
-    if self_join:
-        exact = exact.filter(F.col(probe_id) != F.col(build_id))
-        lsh = lsh.filter(F.col(probe_id) != F.col(build_id))
+    exact = exact.filter(F.col(probe_id) != F.col(build_id))
+    lsh = lsh.filter(F.col(probe_id) != F.col(build_id))
     # ONE aggregation over the exact leg left-joined to the LSH leg:
     # n_exact counts every exact pair, hits counts the matched ones.
     # Both legs emit UNIQUE (probe, build) pairs (row_number-ranked

@@ -23,6 +23,7 @@ from __future__ import annotations
 import dataclasses
 import datetime
 import logging
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,7 @@ from .operators.preprocess import union_encode_split
 from .operators.similarity_join import (
     _collect_build_matrix,
     adjust_partials_numpy,
+    check_impl,
     percentile_radius,
     percentile_radius_lsh,
     resolve_auto_impl,
@@ -108,7 +110,8 @@ def run_adjustment(
     nearest_consented_customers.py:67); here the choice is between
     DISTRIBUTED plans, so it lives at the pipeline dispatch. Explicit
     ``impl=`` pins the strategy (the registered oracle queries pin
-    "sql"/"numpy"; the LSH variants pin "lsh").
+    "sql"/"numpy"; the LSH variants pin "lsh"); a name outside
+    ``similarity_join.IMPLS`` raises ValueError.
 
     ``check_id_uniqueness`` runs one eager count-vs-countDistinct pass per
     side and raises if the configured id columns do not key rows uniquely
@@ -122,6 +125,7 @@ def run_adjustment(
     feeds ``choose_impl``; answers do not depend on them on the exact
     routes.
     """
+    check_impl(impl)
     consent_p, noconsent_p, encoder = union_encode_split(
         consent, noconsent, config, feature_engineering=feature_engineering
     )
@@ -388,6 +392,34 @@ def _per_date_auto_stats(
     return out
 
 
+def _per_date_results(
+    consent: DataFrame,
+    noconsent: DataFrame,
+    config: AdjustmentConfig,
+    dates: list[str],
+    impl: str,
+    caller: str,
+) -> Iterator[tuple[str, AdjustmentResult]]:
+    """The shared per-date loop of the batch drivers: yields
+    ``(date, AdjustmentResult)`` per date, each from its own pushed-down
+    scan pair. The auto-dispatch stats come from ONE grouped pass per
+    side before the first date (``_per_date_auto_stats``)."""
+    if config.date_column is None:
+        raise ValueError(f"{caller} requires config.date_column")
+    stats = (
+        _per_date_auto_stats(consent, noconsent, config)
+        if impl == "auto"
+        else {}
+    )
+    for date in dates:
+        end = _next_day(date)
+        c = scan_between_dates(consent, config.date_column, date, end)
+        nc = scan_between_dates(noconsent, config.date_column, date, end)
+        yield date, run_adjustment(
+            c, nc, config, impl=impl, auto_stats=stats.get(date)
+        )
+
+
 def run_dates(
     spark: SparkSession,
     consent: DataFrame,
@@ -400,19 +432,9 @@ def run_dates(
 ) -> None:
     """O1-O3 driver loop: one distributed job per date, date filters pushed
     down to the scans (reference: pipeline.py:318-360)."""
-    if config.date_column is None:
-        raise ValueError("run_dates requires config.date_column")
-    stats = (
-        _per_date_auto_stats(consent, noconsent, config)
-        if impl == "auto"
-        else {}
-    )
-    for date in dates:
-        end = _next_day(date)
-        c = scan_between_dates(consent, config.date_column, date, end)
-        nc = scan_between_dates(noconsent, config.date_column, date, end)
-        result = run_adjustment(c, nc, config, impl=impl,
-                                auto_stats=stats.get(date))
+    for date, result in _per_date_results(
+        consent, noconsent, config, dates, impl, "run_dates"
+    ):
         write_adjustments_csv(
             result.data_adjusted, result.summary, output_path, date
         )
@@ -477,20 +499,10 @@ def run_dates_collected(
     matches must not mix days), unioned with a ``date`` literal column.
     This is the frame ``run_dates_partitioned`` writes; returning it lazily
     lets callers pick their own sink or feed it to further queries."""
-    if config.date_column is None:
-        raise ValueError("run_dates_collected requires config.date_column")
-    stats = (
-        _per_date_auto_stats(consent, noconsent, config)
-        if impl == "auto"
-        else {}
-    )
     out = None
-    for date in dates:
-        end = _next_day(date)
-        c = scan_between_dates(consent, config.date_column, date, end)
-        nc = scan_between_dates(noconsent, config.date_column, date, end)
-        result = run_adjustment(c, nc, config, impl=impl,
-                                auto_stats=stats.get(date))
+    for date, result in _per_date_results(
+        consent, noconsent, config, dates, impl, "run_dates_collected"
+    ):
         dated = result.data_adjusted.withColumn("date", F.lit(date))
         out = dated if out is None else out.unionByName(dated)
     return out

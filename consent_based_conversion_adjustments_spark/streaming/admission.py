@@ -358,8 +358,8 @@ class AdmissionStore:
         )
         # eager checkpoint: one materialization feeds both the relations
         # write and the rejected-set anti-joins below (admit_batch's
-        # checkpoint_store reasoning; here the table writes are the
-        # durable store, so only the shared relations frame needs cutting)
+        # lineage-cut reasoning; here the table writes are the durable
+        # store, so only the shared relations frame needs cutting)
         relations = D.incremental_minhash_neardup(
             batch_df,
             store_sigs,

@@ -21,7 +21,6 @@ in-state, never as a nested loop over history.
 from __future__ import annotations
 
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,31 +28,6 @@ from pyspark.sql import functions as F
 
 from .events import stream_events_from_parquet
 from ..session import scratch_dir
-
-
-def time_bounded_stream_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    key_col: str,
-    click_ts: str = "click_ts",
-    purchase_ts: str = "purchase_ts",
-    max_delay_seconds: int = 3600,
-) -> DataFrame:
-    """Inner stream-stream join: purchase pairs with every click of the
-    same key with ``click_ts <= purchase_ts <= click_ts + max_delay``
-    (both bounds inclusive). Both inputs must be watermarked streaming
-    DataFrames; the range condition lets the engine expire click state
-    once the watermark passes ``click_ts + max_delay`` and purchase
-    state once it passes ``purchase_ts``."""
-    return purchases.join(
-        clicks,
-        (purchases[key_col] == clicks[key_col])
-        & (F.col(purchase_ts) >= F.col(click_ts))
-        & (
-            F.col(purchase_ts)
-            <= F.col(click_ts) + F.expr(f"interval {max_delay_seconds} seconds")
-        ),
-    ).drop(purchases[key_col])
 
 
 def click_purchase_pairs_streaming(

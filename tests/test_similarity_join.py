@@ -450,6 +450,39 @@ def test_run_adjustment_auto_equals_pinned_exact(spark, tiled_fixture):
     assert a == s
 
 
+def test_unknown_impl_raises_instead_of_running_sql(spark, tiled_fixture):
+    """A misspelled impl must not fall through to the O(m·n) sql plan:
+    both dispatch entry points reject it and name the valid routes."""
+    from consent_based_conversion_adjustments_spark.config import (
+        AdjustmentConfig,
+    )
+    from consent_based_conversion_adjustments_spark.operators.similarity_join import (
+        similarity_join,
+    )
+    from consent_based_conversion_adjustments_spark.pipeline import (
+        run_adjustment,
+    )
+
+    consent, noconsent = tiled_fixture
+    cfg = AdjustmentConfig(
+        conversion_column="conversion_column",
+        id_columns=["id_column"],
+        number_nearest_neighbors=2,
+    )
+    valid = "auto, sql, numpy, grouped, lsh"
+    with pytest.raises(ValueError, match=valid):
+        run_adjustment(consent, noconsent, cfg, impl="nmupy")
+    probe, build = _frames(spark)
+    with pytest.raises(ValueError, match=valid):
+        similarity_join(
+            probe, build, AdjustmentConfig(
+                conversion_column="pid", id_columns=["pid"],
+                number_nearest_neighbors=2,
+            ),
+            probe_id="pid", build_id="bid", impl="nmupy",
+        )
+
+
 def test_auto_n_planes_density_law():
     """The density helper holds expected candidate mass linear in the
     data: p grows by ~log2(G) under G-fold growth, clamped to [4, 24]."""
