@@ -51,39 +51,25 @@ def softmax_weights(
     )
 
 
-def scatter_add(
+def _assemble(
     consent: DataFrame,
-    weighted_pairs: DataFrame,
+    aggs: DataFrame,
+    total_matched: DataFrame | None,
     *,
-    build_id: str = "build_id",
-    consent_id: str = "consent_id",
+    consent_id: str,
     conversion_column: str = "conversion_value",
-    total_matched_value: float | None = None,
-    n_consent: int | None = None,
 ) -> DataFrame:
-    """Distribute weighted shares onto consent rows + bookkeeping columns.
-
-    Output columns mirror the reference exactly
-    (nearest_consented_customers.py:446-466):
-
-    - ``adjusted_conversion``      — Σ weighted shares received (0 if none;
-      NOTE: the reference initialises at 0 and never adds the row's own
-      conversion — kept faithful)
-    - ``average_distance``         — mean distance to matched probes (null
-      for unmatched rows: Spark null ≈ pandas NaN 0/0, FIXTURES.md F5)
-    - ``n_added_conversions``      — number of matched probes
-    - ``sum_distribution_weights`` — Σ softmax weights received
-    - ``naive_adjusted_conversion``— conversion + (Σ matched probe values /
-      n_consent): the uniform-smear baseline (W3)
-    """
-    aggs = weighted_pairs.groupBy(F.col(build_id).alias(consent_id)).agg(
-        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
-        F.sum(DISTANCE).alias("__sum_distance"),
-        F.count(F.lit(1)).alias("n_added_conversions"),
-        F.sum(WEIGHT).alias("sum_distribution_weights"),
-    )
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
+    """The adjusted frame every scatter-add route ends in. ``aggs`` holds
+    one row per receiving consent row: (consent_id, adjusted_conversion,
+    __sum_distance, n_added_conversions, sum_distribution_weights); it is
+    left-joined onto the consent rows, with zeros for rows nothing matched
+    and a null ``average_distance`` there (Spark null ≈ pandas NaN 0/0,
+    FIXTURES.md F5). ``total_matched`` — a 1-row ``__total_matched``
+    frame — adds the naive baseline (W3): conversion + Σ matched probe
+    values / |consent|. Both scalars are attached by broadcast cross
+    joins, so the adjustment stays one lazy Spark job: no driver-side
+    ``first()`` / ``count()`` that would re-run the join per scalar."""
+    out = consent.join(aggs, on=consent_id, how="left").fillna(
         {
             "adjusted_conversion": 0.0,
             "n_added_conversions": 0,
@@ -97,13 +83,64 @@ def scatter_add(
             F.col("__sum_distance") / F.col("n_added_conversions"),
         ),
     ).drop("__sum_distance")
-    if total_matched_value is not None and n_consent is not None:
-        naive = total_matched_value / n_consent
-        out = out.withColumn(
+    if total_matched is None:
+        return out
+    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
+    return (
+        out.crossJoin(F.broadcast(total_matched))
+        .crossJoin(F.broadcast(n_consent))
+        .withColumn(
             "naive_adjusted_conversion",
-            F.col(conversion_column) + F.lit(float(naive)),
+            F.col(conversion_column)
+            + F.col("__total_matched") / F.col("__n_consent"),
         )
-    return out
+        .drop("__total_matched", "__n_consent")
+    )
+
+
+def _total_matched(values: str):
+    """The 1-row total for ``_assemble``: Σ ``values``, 0 when nothing
+    matched."""
+    return F.coalesce(F.sum(values), F.lit(0.0)).alias("__total_matched")
+
+
+def _pair_aggs(weighted: DataFrame, build_id: str, consent_id: str) -> DataFrame:
+    """The scatter-add over weighted row pairs: per receiving build row."""
+    return weighted.groupBy(F.col(build_id).alias(consent_id)).agg(
+        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
+        F.sum(DISTANCE).alias("__sum_distance"),
+        F.count(F.lit(1)).alias("n_added_conversions"),
+        F.sum(WEIGHT).alias("sum_distribution_weights"),
+    )
+
+
+def scatter_add(
+    consent: DataFrame,
+    weighted_pairs: DataFrame,
+    *,
+    build_id: str = "build_id",
+    consent_id: str = "consent_id",
+) -> DataFrame:
+    """Distribute weighted shares onto consent rows + bookkeeping columns.
+
+    Output columns mirror the reference
+    (nearest_consented_customers.py:446-466):
+
+    - ``adjusted_conversion``      — Σ weighted shares received (0 if none;
+      NOTE: the reference initialises at 0 and never adds the row's own
+      conversion — kept faithful)
+    - ``average_distance``         — mean distance to matched probes (null
+      for unmatched rows)
+    - ``n_added_conversions``      — number of matched probes
+    - ``sum_distribution_weights`` — Σ softmax weights received
+
+    The naive baseline needs the probe-level matched total, which weighted
+    pairs alone do not carry: ``distribute_conversions`` adds it.
+    """
+    return _assemble(
+        consent, _pair_aggs(weighted_pairs, build_id, consent_id), None,
+        consent_id=consent_id,
+    )
 
 
 def distribute_conversions(
@@ -115,56 +152,21 @@ def distribute_conversions(
     consent_id: str = "consent_id",
     conversion_column: str = "conversion_value",
 ) -> DataFrame:
-    """softmax_weights + scatter_add in one call (W1 + W2 + W3).
-
-    Fully lazy: the naive-baseline scalars (Σ matched probe values,
-    |consent|) are 1-row aggregates attached via broadcast cross joins, so
-    the whole adjustment stays one Spark job — no driver-side ``first()`` /
-    ``count()`` round-trips (which would re-trigger the similarity join
-    once per scalar)."""
+    """softmax_weights + scatter-add + naive baseline in one call (W1 + W2
+    + W3), the columns of ``scatter_add`` plus
+    ``naive_adjusted_conversion`` — conversion + (Σ matched probe values /
+    n_consent): the uniform-smear baseline."""
     weighted = softmax_weights(
         pairs, probe_id=probe_id, conversion_column=conversion_column
-    )
-    aggs = weighted.groupBy(F.col(build_id).alias(consent_id)).agg(
-        F.sum(WEIGHTED_VALUE).alias("adjusted_conversion"),
-        F.sum(DISTANCE).alias("__sum_distance"),
-        F.count(F.lit(1)).alias("n_added_conversions"),
-        F.sum(WEIGHT).alias("sum_distribution_weights"),
     )
     total_matched = (
         weighted.select(probe_id, conversion_column)
         .dropDuplicates([probe_id])
-        .agg(
-            F.coalesce(F.sum(conversion_column), F.lit(0.0)).alias(
-                "__total_matched"
-            )
-        )
+        .agg(_total_matched(conversion_column))
     )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    return _assemble(
+        consent, _pair_aggs(weighted, build_id, consent_id), total_matched,
+        consent_id=consent_id, conversion_column=conversion_column,
     )
 
 
@@ -237,39 +239,12 @@ def distribute_from_class_pairs(
             "sum_distribution_weights"
         ),
     )
-    total_matched = (
-        probe_classes.join(class_pairs.select(key).distinct(), key)
-        .agg(
-            F.coalesce(F.sum("__convsum"), F.lit(0.0)).alias(
-                "__total_matched"
-            )
-        )
-    )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    total_matched = probe_classes.join(
+        class_pairs.select(key).distinct(), key
+    ).agg(_total_matched("__convsum"))
+    return _assemble(
+        consent, aggs, total_matched,
+        consent_id=consent_id, conversion_column=conversion_column,
     )
 
 
@@ -294,34 +269,8 @@ def distribute_from_partials(
         F.sum("n_partial").alias("n_added_conversions"),
         F.sum("weight_partial").alias("sum_distribution_weights"),
     )
-    total_matched = partials.agg(
-        F.coalesce(F.sum("matched_value_partial"), F.lit(0.0)).alias(
-            "__total_matched"
-        )
-    )
-    n_consent = consent.agg(F.count(F.lit(1)).alias("__n_consent"))
-    out = consent.join(aggs, on=consent_id, how="left")
-    out = out.fillna(
-        {
-            "adjusted_conversion": 0.0,
-            "n_added_conversions": 0,
-            "sum_distribution_weights": 0.0,
-        }
-    )
-    out = out.withColumn(
-        "average_distance",
-        F.when(
-            F.col("n_added_conversions") > 0,
-            F.col("__sum_distance") / F.col("n_added_conversions"),
-        ),
-    ).drop("__sum_distance")
-    return (
-        out.crossJoin(F.broadcast(total_matched))
-        .crossJoin(F.broadcast(n_consent))
-        .withColumn(
-            "naive_adjusted_conversion",
-            F.col(conversion_column)
-            + F.col("__total_matched") / F.col("__n_consent"),
-        )
-        .drop("__total_matched", "__n_consent")
+    total_matched = partials.agg(_total_matched("matched_value_partial"))
+    return _assemble(
+        consent, aggs, total_matched,
+        consent_id=consent_id, conversion_column=conversion_column,
     )

@@ -3,25 +3,34 @@
 The reference builds a sklearn ``NearestNeighbors`` index over the consenting
 ("build") side and probes it with every non-consenting row
 (reference: nearest_consented_customers.py:46-264). Spark has no kNN join, so
-this module provides two physical strategies with identical semantics:
+this module provides four physical routes; ``impl="auto"`` picks one through
+the gates of ``choose_impl``:
 
 ``impl="sql"`` — pure DataFrame composition: broadcast cross join →
     Catalyst distance expression → ``row_number`` top-k (kNN) or theta
-    predicate (radius). Fully declarative, DuckDB-oracle-checkable, and the
-    plan Catalyst produces is BroadcastNestedLoopJoin → Window. The only
-    shuffle is the hash exchange for the per-probe window.
+    predicate (radius). Fully declarative and DuckDB-oracle-checkable: the
+    reference plan the parity tests compare every other route against.
+    ``auto`` never picks it.
 
-``impl="numpy"`` — the scale path: the build side's (id, features) matrix is
-    broadcast to executors once, and ``mapInPandas`` computes vectorized
-    chunked top-k per probe partition with numpy. ZERO shuffle: output is
-    probe-partitioned (probe_id, build_id, distance) pairs directly. This is
-    the strategy that survives a 100 TB probe side — per-partition cost is
-    O(rows × n_build × width) flops with no m×n row materialization, and it
-    replaces the reference's single-node sklearn query
-    (nearest_consented_customers.py:184-221) with an embarrassingly parallel
-    scan.
+``impl="numpy"`` — the broadcast scan: the build side's (id, features)
+    matrix is broadcast to executors once, and ``mapInPandas`` computes
+    chunked distances per probe partition with numpy. ZERO shuffle: output
+    is probe-partitioned (probe cols…, build_id, distance) pairs directly.
+    ``auto`` picks it while the row pair grid n_probe·n_build fits
+    ``AUTO_MAX_PAIR_GRID`` and the collected matrix fits
+    ``AUTO_BUILD_MATRIX_BYTES`` (and whenever the feature width is unknown).
 
-Both strategies break distance ties deterministically by ``build_id``.
+``impl="grouped"`` — the dictionary kernel: distances over the grid of
+    DISTINCT probe × build vectors, selection per probe class, expansion
+    to rows only at the output join — O(d_p·d_b + output). ``auto`` picks
+    it when the row grid fails its gate but the class grid d_p·d_b fits
+    the same pair budget (low-cardinality spaces such as one-hots).
+
+``impl="lsh"`` — the beyond-broadcast route: both sides signed by random
+    hyperplanes and co-grouped by (table, signature); approximate. ``auto``
+    picks it when both exact gates fail.
+
+The exact routes agree row for row: distance ties break by ``build_id``.
 
 The matched-pairs long format ``(probe cols…, build_id, distance)`` is the
 engine's core IR — weighting, scatter-add, and all summaries are windows and
@@ -82,6 +91,19 @@ def _pairs_with_distance(
         ),
     )
     return pairs.drop(features, BUILD_FEATURES)
+
+
+def _first_k(pairs: DataFrame, key: str, k: int, build_id: str) -> DataFrame:
+    """The k nearest rows per ``key``, ranked by (distance, build_id) —
+    the tie-break every exact route shares."""
+    w = Window.partitionBy(key).orderBy(
+        F.col(DISTANCE).asc(), F.col(build_id).asc()
+    )
+    return (
+        pairs.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 def resolve_k(number_nearest_neighbors: float, n_build: int) -> int:
@@ -213,14 +235,7 @@ def knn_topk_classes(
         F.col(build_id).alias(build_id), F.col(features).alias("__bf")
     )
     cand = cand_classes.join(brows, "__bf").select(key, build_id, DISTANCE)
-    w_rank = Window.partitionBy(key).orderBy(
-        F.col(DISTANCE).asc(), F.col(build_id).asc()
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w_rank))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _first_k(cand, key, k, build_id)
 
 
 def radius_classes(
@@ -250,44 +265,15 @@ def radius_classes(
     return grid.join(brows, "__bf").select(key, build_id, DISTANCE)
 
 
-def _knn_join_grouped(
-    probe: DataFrame,
-    build: DataFrame,
-    k: int,
-    *,
-    metric: str = "manhattan",
-    build_id: str = "build_id",
-    features: str = "features",
-    feature_width: int | None = None,
+def _expand_classes(
+    probe: DataFrame, class_pairs: DataFrame, features: str
 ) -> DataFrame:
-    """Dictionary kNN: ``knn_topk_classes`` broadcast onto probe rows."""
-    topk = knn_topk_classes(
-        probe, build, k, metric=metric, build_id=build_id,
-        features=features, feature_width=feature_width,
-    )
+    """Dictionary-route pairs: the per-class matches (``__pf``-keyed
+    ``knn_topk_classes`` / ``radius_classes`` output) expanded onto the
+    probe rows of each class. Output-bound: every materialized row beyond
+    the d_p·d_b grid is an output row or one of its expansion precursors."""
     payload = probe.withColumn("__pf", F.col(features)).drop(features)
-    return payload.join(F.broadcast(topk), "__pf").drop("__pf")
-
-
-def _radius_join_grouped(
-    probe: DataFrame,
-    build: DataFrame,
-    radius: float,
-    *,
-    metric: str = "manhattan",
-    build_id: str = "build_id",
-    features: str = "features",
-    feature_width: int | None = None,
-) -> DataFrame:
-    """Dictionary radius join: ``radius_classes`` expanded onto probe
-    rows. Output-bound: every materialized row beyond the d_p·d_b grid
-    is an output row or one of its two expansion precursors."""
-    cand = radius_classes(
-        probe, build, radius, metric=metric, build_id=build_id,
-        features=features, feature_width=feature_width,
-    )
-    payload = probe.withColumn("__pf", F.col(features)).drop(features)
-    return payload.join(cand, "__pf").drop("__pf")
+    return payload.join(class_pairs, "__pf").drop("__pf")
 
 
 def _min_distance_grouped(
@@ -331,24 +317,20 @@ def knn_join(
     exactly k rows per probe. reference: nearest_consented_customers.py:184-221.
     """
     if impl == "numpy":
-        return _knn_join_numpy(
-            probe, build, k, metric=metric, build_id=build_id,
+        return _join_numpy(
+            probe, build, k=k, metric=metric, build_id=build_id,
             features=features, build_matrix=build_matrix,
         )
     if impl == "grouped":
-        return _knn_join_grouped(
+        topk = knn_topk_classes(
             probe, build, k, metric=metric, build_id=build_id,
             features=features, feature_width=feature_width,
         )
+        return _expand_classes(probe, F.broadcast(topk), features)
     pairs = _pairs_with_distance(
         probe, build, metric, build_id, features, feature_width
     )
-    w = Window.partitionBy(probe_id).orderBy(F.col(DISTANCE).asc(), F.col(build_id).asc())
-    return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _first_k(pairs, probe_id, k, build_id)
 
 
 def radius_join(
@@ -370,15 +352,16 @@ def radius_join(
     anti-join against this output's probe ids.
     """
     if impl == "numpy":
-        return _radius_join_numpy(
-            probe, build, radius, metric=metric, build_id=build_id,
+        return _join_numpy(
+            probe, build, radius=radius, metric=metric, build_id=build_id,
             features=features, build_matrix=build_matrix,
         )
     if impl == "grouped":
-        return _radius_join_grouped(
+        cand = radius_classes(
             probe, build, radius, metric=metric, build_id=build_id,
             features=features, feature_width=feature_width,
         )
+        return _expand_classes(probe, cand, features)
     pairs = _pairs_with_distance(
         probe, build, metric, build_id, features, feature_width
     )
@@ -405,8 +388,8 @@ def min_distance_per_probe(
     partial/final min with no pair materialization beyond the scan.
     """
     if impl == "numpy":
-        pairs = _knn_join_numpy(
-            probe.select(probe_id, features), build, 1, metric=metric,
+        pairs = _join_numpy(
+            probe.select(probe_id, features), build, k=1, metric=metric,
             build_id=build_id, features=features, build_matrix=build_matrix,
         )
         return pairs.select(
@@ -452,12 +435,24 @@ def percentile_radius(
         features=features, impl=impl, feature_width=feature_width,
         build_matrix=build_matrix,
     )
-    row = nearest.select(
-        F.expr(
-            f"percentile(distance_to_nearest_neighbor, {percentile!r})"
-        ).alias("radius")
-    ).first()
-    return float(row["radius"])
+    return _quantile(nearest, "distance_to_nearest_neighbor", percentile)
+
+
+def _quantile(nearest: DataFrame, column: str, percentile: float) -> float:
+    """Spark's exact ``percentile`` of the nearest-neighbour distances.
+    The aggregate is null when no probe found a neighbour, which happens
+    only when the probe or the build side is empty — raise there instead
+    of returning a radius that does not exist."""
+    radius = nearest.select(
+        F.expr(f"percentile({column}, {percentile!r})")
+    ).first()[0]
+    if radius is None:
+        raise ValueError(
+            "percentile mode needs rows on both sides: the build "
+            "(consenting) side or the probe side is empty, so there is no "
+            "nearest-neighbour distance to take a percentile of"
+        )
+    return float(radius)
 
 
 #: measured broadcast→LSH crossover (PERF.md rounds 11-12, organic sf1.0
@@ -473,8 +468,8 @@ def percentile_radius(
 #: single-stage observed) × LSH floor (~4 s) ≈ 1e8 pairs.
 AUTO_MAX_PAIR_GRID = 100_000_000
 #: build-matrix size cap for the broadcast kernels: the driver and every
-#: executor core hold the collected n_build×width float64 matrix; 128 MB
-#: mirrors ``_auto_chunk``'s per-task arithmetic budget
+#: executor core hold the collected n_build×width float64 matrix; the
+#: same 128 MB is ``_auto_chunk``'s per-task arithmetic budget
 AUTO_BUILD_MATRIX_BYTES = 128 << 20
 
 
@@ -599,9 +594,12 @@ def similarity_join(
     (line 513) so ``radius=0.0`` is a valid empty-match join (FIXTURES.md F5).
 
     ``impl="auto"`` (the default, mirroring the reference's
-    ``algorithm='auto'``) resolves to the exact broadcast kernel or the
-    LSH route via ``choose_impl`` — two count() jobs when ``n_probe`` /
-    ``n_build`` aren't supplied, then the measured crossover decides.
+    ``algorithm='auto'``) resolves via ``resolve_auto_impl`` /
+    ``choose_impl`` to the exact broadcast kernel ("numpy", the row pair
+    grid fits), the exact dictionary kernel ("grouped", only the distinct-
+    vector grid fits) or the LSH route (neither fits) — two count() jobs
+    when ``n_probe`` / ``n_build`` aren't supplied, plus two count-distinct
+    jobs only once the row grid has failed its gate.
     ``impl="lsh"`` forces the beyond-broadcast route for every mode
     (kNN / radius / percentile) — neither side is collected or broadcast;
     requires ``feature_width``. Approximate (recall set by the LSH
@@ -647,8 +645,8 @@ def similarity_join(
         if impl == "numpy":
             # the numpy kernel collects the build side anyway — resolve and
             # validate k there instead of paying a separate count() job
-            return _knn_join_numpy(
-                probe, build, config.number_nearest_neighbors,
+            return _join_numpy(
+                probe, build, k=config.number_nearest_neighbors,
                 metric=config.metric, build_id=build_id, features=features,
                 build_matrix=build_matrix,
             )
@@ -1021,6 +1019,100 @@ def _lsh_coarse_groups(n_rows_hint: int | None, n_planes: int) -> int | None:
     return None if g >= (1 << n_planes) else g
 
 
+def _lsh_bucket_join(
+    probe: DataFrame,
+    build: DataFrame,
+    feature_width: int,
+    select,
+    *,
+    metric: str,
+    probe_id: str,
+    build_id: str,
+    features: str,
+    n_planes: int,
+    n_tables: int,
+    n_rows_hint: int | None,
+) -> DataFrame:
+    """The bucketed co-group both LSH joins run: sign both sides with the
+    deterministic hyperplanes (multi-table OR-amplification), co-group by
+    (table, signature) — or by (table, hash(signature) mod g) when
+    ``_lsh_coarse_groups`` coarsens on the row hint — and, per signature
+    inside each group, apply ``select`` (D → rows, cols, distances) to the
+    bucket's distance matrix. A pair colliding in several tables surfaces
+    once per table with an identical distance; a narrow groupBy-min
+    collapses it to one (probe_id, build_id, distance) row."""
+    from .similarity_search import _signature_array
+
+    sig = _signature_array(
+        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
+    )
+    q = probe.select(
+        F.col(probe_id).alias("__pid"),
+        F.col(features).alias("__f"),
+        F.posexplode(sig).alias("table_id", "lsh_sig"),
+    )
+    c = build.select(
+        F.col(build_id).alias("__bid"),
+        F.col(features).alias("__f"),
+        F.posexplode(sig).alias("table_id", "lsh_sig"),
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField(probe_id, probe.schema[probe_id].dataType, True),
+            T.StructField(build_id, build.schema[build_id].dataType, True),
+            T.StructField(DISTANCE, T.DoubleType(), False),
+        ]
+    )
+
+    def per_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
+        if left.empty or right.empty:
+            return empty
+        # ONE conversion per group, then per-signature slices: the stable
+        # sort keeps each signature's build rows ordered by build id, so
+        # the stable top-k tie-break is (distance, build_id)
+        left = left.sort_values("lsh_sig", kind="stable")
+        right = right.sort_values(["lsh_sig", "__bid"], kind="stable")
+        Q = np.array(left["__f"].tolist(), dtype=np.float64)
+        C = np.array(right["__f"].tolist(), dtype=np.float64)
+        l_sig = left["lsh_sig"].to_numpy()
+        r_sig = right["lsh_sig"].to_numpy()
+        pids = left["__pid"].to_numpy()
+        bids = right["__bid"].to_numpy()
+        outs = []
+        for s in np.intersect1d(l_sig, r_sig):
+            ql, qh = np.searchsorted(l_sig, [s, s + 1])
+            cl, ch = np.searchsorted(r_sig, [s, s + 1])
+            Qs, Cs = Q[ql:qh], C[cl:ch]
+            binary = _is_binary(Cs) and _is_binary(Qs)
+            rows, cols, dist = select(_chunk_distances(Qs, Cs, metric, binary))
+            outs.append(
+                pd.DataFrame(
+                    {
+                        probe_id: pids[ql:qh][rows],
+                        build_id: bids[cl:ch][cols],
+                        DISTANCE: dist,
+                    }
+                )
+            )
+        return pd.concat(outs, ignore_index=True) if outs else empty
+
+    g = _lsh_coarse_groups(n_rows_hint, n_planes)
+    keys = ["table_id", "lsh_sig"]
+    if g is not None:
+        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
+        q, c = q.withColumn("__grp", grp), c.withColumn("__grp", grp)
+        keys = ["table_id", "__grp"]
+    local = (
+        q.groupBy(*keys)
+        .cogroup(c.groupBy(*keys))
+        .applyInPandas(per_group, schema=out_schema)
+    )
+    return local.groupBy(probe_id, build_id).agg(
+        F.min(DISTANCE).alias(DISTANCE)
+    )
+
+
 def knn_join_lsh(
     probe: DataFrame,
     build: DataFrame,
@@ -1066,118 +1158,13 @@ def knn_join_lsh(
     size (g grows with n until it reaches the 2^p per-signature
     granularity, which is exactly the pre-hint shape).
     """
-    from .similarity_search import _signature_array
-
-    sig = _signature_array(
-        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
+    local = _lsh_bucket_join(
+        probe, build, feature_width, lambda D: _topk_pairs(D, k),
+        metric=metric, probe_id=probe_id, build_id=build_id,
+        features=features, n_planes=n_planes, n_tables=n_tables,
+        n_rows_hint=n_rows_hint,
     )
-    q = probe.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    c = build.select(
-        F.col(build_id).alias("__bid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(
-                probe_id, probe.schema[probe_id].dataType, True
-            ),
-            T.StructField(build_id, build.schema[build_id].dataType, True),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def _topk_one_bucket(Q, C, pids, bids):
-        """Per-signature top-k — identical math on either grouping: the
-        same distance kernel, the same stable argsort whose tie-break is
-        (distance, build_id) because C rows arrive sorted by build id."""
-        D = _chunk_distances(Q, C, metric, _is_binary(C) and _is_binary(Q))
-        kk = min(k, D.shape[1])
-        idx = np.argsort(D, axis=1, kind="stable")[:, :kk]
-        dist = np.take_along_axis(D, idx, axis=1)
-        return pd.DataFrame(
-            {
-                probe_id: pids.repeat(kk),
-                build_id: bids[idx].ravel(),
-                DISTANCE: dist.ravel(),
-            }
-        )
-
-    def bucket_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {probe_id: [], build_id: [], DISTANCE: []}
-            )
-        # sort candidates by id so the stable argsort tie-break is
-        # (distance, build_id), matching the exact join
-        right = right.sort_values("__bid", kind="stable")
-        Q = np.array(left["__f"].tolist(), dtype=np.float64)
-        C = np.array(right["__f"].tolist(), dtype=np.float64)
-        return _topk_one_bucket(
-            Q, C, left["__pid"].to_numpy(), right["__bid"].to_numpy()
-        )
-
-    def coarse_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        if left.empty or right.empty:
-            return empty
-        # ONE conversion for the whole coarse group, then per-signature
-        # slices: stable sort keeps each signature's C rows ordered by
-        # build id (the tie-break) and Q rows in their group order
-        left = left.sort_values("lsh_sig", kind="stable")
-        right = right.sort_values(["lsh_sig", "__bid"], kind="stable")
-        Q_all = np.array(left["__f"].tolist(), dtype=np.float64)
-        C_all = np.array(right["__f"].tolist(), dtype=np.float64)
-        l_sig = left["lsh_sig"].to_numpy()
-        r_sig = right["lsh_sig"].to_numpy()
-        l_pid = left["__pid"].to_numpy()
-        r_bid = right["__bid"].to_numpy()
-        outs = []
-        for s in np.intersect1d(np.unique(l_sig), np.unique(r_sig)):
-            ql, qh = np.searchsorted(l_sig, [s, s + 1])
-            cl, ch = np.searchsorted(r_sig, [s, s + 1])
-            outs.append(
-                _topk_one_bucket(
-                    Q_all[ql:qh], C_all[cl:ch], l_pid[ql:qh], r_bid[cl:ch]
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    g = _lsh_coarse_groups(n_rows_hint, n_planes)
-    if g is None:
-        local = (
-            q.groupBy("table_id", "lsh_sig")
-            .cogroup(c.groupBy("table_id", "lsh_sig"))
-            .applyInPandas(bucket_topk, schema=out_schema)
-        )
-    else:
-        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
-        local = (
-            q.withColumn("__grp", grp)
-            .groupBy("table_id", "__grp")
-            .cogroup(
-                c.withColumn("__grp", grp).groupBy("table_id", "__grp")
-            )
-            .applyInPandas(coarse_topk, schema=out_schema)
-        )
-    # a pair surfaces once per agreeing table with an identical distance —
-    # collapse before the global top-k (narrow rows only; the feature
-    # arrays never left their buckets)
-    deduped = local.groupBy(probe_id, build_id).agg(
-        F.min(DISTANCE).alias(DISTANCE)
-    )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col(DISTANCE).asc(), F.col(build_id).asc()
-    )
-    return (
-        deduped.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _first_k(local, probe_id, k, build_id)
 
 
 def radius_join_lsh(
@@ -1209,93 +1196,11 @@ def radius_join_lsh(
     does) rather than materialize. Recall is governed by
     n_planes/n_tables; tests assert a floor vs the exact join.
     """
-    from .similarity_search import _signature_array
-
-    sig = _signature_array(
-        features, dim=feature_width, n_planes=n_planes, n_tables=n_tables
-    )
-    q = probe.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    c = build.select(
-        F.col(build_id).alias("__bid"),
-        F.col(features).alias("__f"),
-        F.posexplode(sig).alias("table_id", "lsh_sig"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(probe_id, probe.schema[probe_id].dataType, True),
-            T.StructField(build_id, build.schema[build_id].dataType, True),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def _radius_one_bucket(Q, C, pids, bids):
-        D = _chunk_distances(Q, C, metric, _is_binary(C) and _is_binary(Q))
-        rows, cols = np.nonzero(D <= radius)
-        return pd.DataFrame(
-            {
-                probe_id: pids[rows],
-                build_id: bids[cols],
-                DISTANCE: D[rows, cols],
-            }
-        )
-
-    def bucket_radius(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        Q = np.array(left["__f"].tolist(), dtype=np.float64)
-        C = np.array(right["__f"].tolist(), dtype=np.float64)
-        return _radius_one_bucket(
-            Q, C, left["__pid"].to_numpy(), right["__bid"].to_numpy()
-        )
-
-    def coarse_radius(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({probe_id: [], build_id: [], DISTANCE: []})
-        if left.empty or right.empty:
-            return empty
-        # one conversion per coarse group, per-signature slices — see
-        # knn_join_lsh's coarse_topk for the grouping rationale
-        left = left.sort_values("lsh_sig", kind="stable")
-        right = right.sort_values("lsh_sig", kind="stable")
-        Q_all = np.array(left["__f"].tolist(), dtype=np.float64)
-        C_all = np.array(right["__f"].tolist(), dtype=np.float64)
-        l_sig = left["lsh_sig"].to_numpy()
-        r_sig = right["lsh_sig"].to_numpy()
-        l_pid = left["__pid"].to_numpy()
-        r_bid = right["__bid"].to_numpy()
-        outs = []
-        for s in np.intersect1d(np.unique(l_sig), np.unique(r_sig)):
-            ql, qh = np.searchsorted(l_sig, [s, s + 1])
-            cl, ch = np.searchsorted(r_sig, [s, s + 1])
-            outs.append(
-                _radius_one_bucket(
-                    Q_all[ql:qh], C_all[cl:ch], l_pid[ql:qh], r_bid[cl:ch]
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    g = _lsh_coarse_groups(n_rows_hint, n_planes)
-    if g is None:
-        local = (
-            q.groupBy("table_id", "lsh_sig")
-            .cogroup(c.groupBy("table_id", "lsh_sig"))
-            .applyInPandas(bucket_radius, schema=out_schema)
-        )
-    else:
-        grp = F.pmod(F.xxhash64("lsh_sig"), F.lit(g))
-        local = (
-            q.withColumn("__grp", grp)
-            .groupBy("table_id", "__grp")
-            .cogroup(
-                c.withColumn("__grp", grp).groupBy("table_id", "__grp")
-            )
-            .applyInPandas(coarse_radius, schema=out_schema)
-        )
-    return local.groupBy(probe_id, build_id).agg(
-        F.min(DISTANCE).alias(DISTANCE)
+    return _lsh_bucket_join(
+        probe, build, feature_width, lambda D: _within(D, radius),
+        metric=metric, probe_id=probe_id, build_id=build_id,
+        features=features, n_planes=n_planes, n_tables=n_tables,
+        n_rows_hint=n_rows_hint,
     )
 
 
@@ -1324,10 +1229,7 @@ def percentile_radius_lsh(
         metric=metric, probe_id=probe_id, build_id=build_id,
         features=features, n_planes=n_planes, n_tables=n_tables,
     )
-    row = nearest.select(
-        F.expr(f"percentile({DISTANCE}, {percentile!r})").alias("radius")
-    ).first()
-    return float(row["radius"])
+    return _quantile(nearest, DISTANCE, percentile)
 
 
 # ---------------------------------------------------------------------------
@@ -1346,8 +1248,10 @@ def _collect_build_matrix(
 
 
 def _is_binary(M: np.ndarray) -> bool:
-    sample = M[: min(len(M), 64)]
-    return bool(((sample == 0.0) | (sample == 1.0)).all())
+    """Every entry is 0 or 1. The whole matrix is checked: one non-0/1
+    row anywhere makes the binary manhattan identity wrong, and the check
+    is O(rows·width) against the distances' O(chunk·rows·width)."""
+    return bool(((M == 0.0) | (M == 1.0)).all())
 
 
 def _chunk_distances(
@@ -1386,130 +1290,120 @@ def _chunk_distances(
     raise ValueError(f"unsupported metric: {metric!r}")
 
 
-def _auto_chunk(n_build: int, width: int, budget_bytes: int = 128 << 20) -> int:
+def _auto_chunk(n_build: int, width: int) -> int:
     """Probe-chunk size keeping the chunk×n×w manhattan broadcast (worst
-    case) inside a fixed per-task memory budget."""
+    case) inside the per-task budget ``AUTO_BUILD_MATRIX_BYTES``."""
     per_row = max(1, n_build * max(width, 1) * 8)
-    return max(16, min(1024, budget_bytes // per_row))
+    return max(16, min(1024, AUTO_BUILD_MATRIX_BYTES // per_row))
 
 
-def _knn_join_numpy(
+def _topk(D: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per row, the positions and distances of its k nearest columns.
+
+    Stable argsort = lexicographic (distance, position); build rows are
+    sorted by build_id, so ties at the k-th distance resolve to the
+    smallest build_id exactly like the sql path's row_number ORDER BY
+    (distance, build_id). (An argpartition pre-pass would be faster for
+    huge n but picks arbitrary candidates among boundary ties — wrong.)"""
+    idx = np.argsort(D, axis=1, kind="stable")[:, :k]
+    return idx, np.take_along_axis(D, idx, axis=1)
+
+
+def _topk_pairs(
+    D: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``_topk`` flattened to (rows, cols, distances), row-major."""
+    idx, dist = _topk(D, k)
+    return np.arange(len(D)).repeat(idx.shape[1]), idx.ravel(), dist.ravel()
+
+
+def _within(
+    D: np.ndarray, radius: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every (row, col, distance) with distance ≤ radius, row-major."""
+    rows, cols = np.nonzero(D <= radius)
+    return rows, cols, D[rows, cols]
+
+
+def _broadcast_build(
     probe: DataFrame,
     build: DataFrame,
-    k: float,
+    build_id: str,
+    features: str,
+    build_matrix: tuple[np.ndarray, np.ndarray] | None,
+):
+    """Setup of the numpy scan, once per join: collect (or reuse) the
+    id-sorted build matrix and broadcast it. Returns (broadcast, n_build,
+    the Spark type of build ids)."""
+    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
+    id_type = (
+        T.LongType() if np.issubdtype(ids.dtype, np.integer) else T.StringType()
+    )
+    bc = probe.sparkSession.sparkContext.broadcast((ids, mat))
+    return bc, len(ids), id_type
+
+
+def _scan(
+    batches: Iterator[pd.DataFrame], B: np.ndarray, metric: str, features: str
+) -> Iterator[tuple[pd.DataFrame, int, int, np.ndarray]]:
+    """The numpy scan, run in each Python worker: per probe chunk
+    ``pdf[lo:hi]`` of each Arrow batch, yield (pdf, lo, hi, D) with D the
+    chunk×n_build distance matrix against the broadcast build matrix
+    ``B``. Yields nothing when the build side is empty."""
+    binary = metric == "manhattan" and _is_binary(B)
+    step = _auto_chunk(len(B), B.shape[-1])
+    for pdf in batches:
+        if pdf.empty or not len(B):
+            continue
+        X = np.array(pdf[features].tolist(), dtype=np.float64)
+        x_binary = binary and _is_binary(X)
+        for lo in range(0, len(pdf), step):
+            hi = min(lo + step, len(pdf))
+            yield pdf, lo, hi, _chunk_distances(X[lo:hi], B, metric, x_binary)
+
+
+def _join_numpy(
+    probe: DataFrame,
+    build: DataFrame,
     *,
+    k: float | None = None,
+    radius: float | None = None,
     metric: str,
     build_id: str,
     features: str,
-    chunk: int | None = None,
     build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
-    """Broadcast-build vectorized kNN via mapInPandas — no shuffle.
-
-    Build ids arrive pre-sorted so the stable argsort on (distance,
-    position) reproduces the SQL path's (distance, build_id) tie-break
-    exactly. ``k`` may be fractional (proportional-k) — resolved against
-    the collected build side, sparing the driver a count() job.
-    """
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    k = resolve_k(k, len(ids))
-    bc = spark.sparkContext.broadcast((ids, mat))
-    pass_cols = [c for c in probe.columns if c != features]
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
+    """Broadcast-build vectorized kNN (``k``) or radius (``radius``) join
+    via mapInPandas — no shuffle. Returns every probe column but the
+    features, plus (build_id, distance). ``k`` may be fractional
+    (proportional-k) — resolved against the collected build side, sparing
+    the driver a count() job."""
+    bc, n, id_type = _broadcast_build(
+        probe, build, build_id, features, build_matrix
     )
+    if k is not None:
+        k = resolve_k(k, n)
+    pass_cols = [c for c in probe.columns if c != features]
     out_schema = T.StructType(
         [probe.schema[c] for c in pass_cols]
         + [
-            T.StructField(build_id, id_dtype, False),
+            T.StructField(build_id, id_type, False),
             T.StructField(DISTANCE, T.DoubleType(), False),
         ]
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b_ids, B = bc.value
-        n = B.shape[0]
-        kk = min(k, n)
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(n, B.shape[1])
-        for pdf in batches:
-            if pdf.empty:
+        for pdf, lo, hi, D in _scan(batches, B, metric, features):
+            rows, cols, dist = (
+                _topk_pairs(D, k) if k is not None else _within(D, radius)
+            )
+            if len(rows) == 0:
                 continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                # stable argsort = lexicographic (distance, position); B rows
-                # are pre-sorted by build_id, so ties at the k-th distance
-                # resolve to the smallest build_id exactly like the SQL
-                # path's row_number ORDER BY (distance, build_id). (An
-                # argpartition pre-pass would be faster for huge n but picks
-                # arbitrary candidates among boundary ties — wrong.)
-                idx_final = np.argsort(D, axis=1, kind="stable")[:, :kk]
-                dist_final = np.take_along_axis(D, idx_final, axis=1)
-                rep = pdf.iloc[lo:hi][pass_cols].loc[
-                    pdf.index[lo:hi].repeat(kk)
-                ].reset_index(drop=True)
-                rep[build_id] = b_ids[idx_final].ravel()
-                rep[DISTANCE] = dist_final.ravel()
-                yield rep
-
-    return probe.mapInPandas(compute, schema=out_schema)
-
-
-def _radius_join_numpy(
-    probe: DataFrame,
-    build: DataFrame,
-    radius: float,
-    *,
-    metric: str,
-    build_id: str,
-    features: str,
-    chunk: int | None = None,
-    build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    bc = spark.sparkContext.broadcast((ids, mat))
-    pass_cols = [c for c in probe.columns if c != features]
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
-    )
-    out_schema = T.StructType(
-        [probe.schema[c] for c in pass_cols]
-        + [
-            T.StructField(build_id, id_dtype, False),
-            T.StructField(DISTANCE, T.DoubleType(), False),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, B = bc.value
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(B.shape[0], B.shape[1])
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                rows, cols = np.nonzero(D <= radius)
-                if len(rows) == 0:
-                    continue
-                rep = pdf.iloc[lo:hi][pass_cols].iloc[rows].reset_index(drop=True)
-                rep[build_id] = b_ids[cols]
-                rep[DISTANCE] = D[rows, cols]
-                yield rep
+            rep = pdf.iloc[lo:hi][pass_cols].iloc[rows].reset_index(drop=True)
+            rep[build_id] = b_ids[cols]
+            rep[DISTANCE] = dist
+            yield rep
 
     return probe.mapInPandas(compute, schema=out_schema)
 
@@ -1524,7 +1418,6 @@ def adjust_partials_numpy(
     build_id: str = "build_id",
     features: str = "features",
     conversion_column: str = "conversion_value",
-    chunk: int | None = None,
     build_matrix: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Fused similarity-join + softmax + map-side scatter-add (W1+W2 in the
@@ -1548,18 +1441,13 @@ def adjust_partials_numpy(
     """
     if (k is None) == (radius is None):
         raise ValueError("exactly one of k / radius required")
-    spark = probe.sparkSession
-    ids, mat = build_matrix or _collect_build_matrix(build, build_id, features)
-    kk = resolve_k(k, len(ids)) if k is not None else None
-    bc = spark.sparkContext.broadcast((ids, mat))
-    id_dtype = (
-        T.LongType()
-        if np.issubdtype(ids.dtype, np.integer)
-        else T.StringType()
+    bc, n, id_type = _broadcast_build(
+        probe, build, build_id, features, build_matrix
     )
+    kk = resolve_k(k, n) if k is not None else None
     out_schema = T.StructType(
         [
-            T.StructField(build_id, id_dtype, True),
+            T.StructField(build_id, id_type, True),
             T.StructField("adjusted_partial", T.DoubleType(), False),
             T.StructField("sum_distance_partial", T.DoubleType(), False),
             T.StructField("n_partial", T.LongType(), False),
@@ -1571,66 +1459,38 @@ def adjust_partials_numpy(
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b_ids, B = bc.value
-        n = B.shape[0]
         acc_adj = np.zeros(n)
         acc_dist = np.zeros(n)
         acc_cnt = np.zeros(n, dtype=np.int64)
         acc_w = np.zeros(n)
         tmv = 0.0
-        binary = metric == "manhattan" and _is_binary(B)
-        step = chunk or _auto_chunk(n, B.shape[1] if n else 1)
-        for pdf in batches:
-            if pdf.empty or n == 0:
-                continue
-            X = np.array(pdf[features].tolist(), dtype=np.float64)
-            conv = pdf[conversion_column].to_numpy(dtype=np.float64)
-            if binary and not _is_binary(X):
-                binary = False
-            for lo in range(0, len(pdf), step):
-                hi = min(lo + step, len(pdf))
-                D = _chunk_distances(X[lo:hi], B, metric, binary)
-                cv = conv[lo:hi]
-                if kk is not None:
-                    if kk == 0:
-                        continue
-                    # same stable (distance, position) tie-break as
-                    # _knn_join_numpy — b_ids pre-sorted by _collect
-                    idx = np.argsort(D, axis=1, kind="stable")[:, :kk]
-                    dist = np.take_along_axis(D, idx, axis=1)
-                    shift = dist[:, :1]  # min distance ⇒ max of −d
-                    e = np.exp(shift - dist)
-                    w = e / e.sum(axis=1, keepdims=True)
-                    flat = idx.ravel()
-                    acc_adj += np.bincount(
-                        flat, weights=(w * cv[:, None]).ravel(), minlength=n
-                    )
-                    acc_dist += np.bincount(
-                        flat, weights=dist.ravel(), minlength=n
-                    )
-                    acc_cnt += np.bincount(flat, minlength=n)
-                    acc_w += np.bincount(flat, weights=w.ravel(), minlength=n)
-                    tmv += cv.sum()
-                else:
-                    rows, cols = np.nonzero(D <= radius)
-                    if len(rows) == 0:
-                        continue
-                    d = D[rows, cols]
-                    counts = np.bincount(rows, minlength=hi - lo)
-                    nz = counts > 0
-                    cnz = counts[nz]
-                    starts = np.concatenate(([0], np.cumsum(cnz)[:-1]))
-                    rmin = np.minimum.reduceat(d, starts)
-                    e = np.exp(np.repeat(rmin, cnz) - d)
-                    denom = np.add.reduceat(e, starts)
-                    w = e / np.repeat(denom, cnz)
-                    convs = cv[rows]
-                    acc_adj += np.bincount(
-                        cols, weights=w * convs, minlength=n
-                    )
-                    acc_dist += np.bincount(cols, weights=d, minlength=n)
-                    acc_cnt += np.bincount(cols, minlength=n)
-                    acc_w += np.bincount(cols, weights=w, minlength=n)
-                    tmv += cv[nz].sum()
+        for pdf, lo, hi, D in _scan(batches, B, metric, features):
+            cv = pdf[conversion_column].to_numpy(dtype=np.float64)[lo:hi]
+            if kk is not None:
+                idx, dist = _topk(D, kk)
+                e = np.exp(dist[:, :1] - dist)  # min distance ⇒ max of −d
+                w = e / e.sum(axis=1, keepdims=True)
+                cols, d = idx.ravel(), dist.ravel()
+                weighted, w = (w * cv[:, None]).ravel(), w.ravel()
+                matched = cv
+            else:
+                rows, cols, d = _within(D, radius)
+                if len(rows) == 0:
+                    continue
+                counts = np.bincount(rows, minlength=hi - lo)
+                nz = counts > 0
+                cnz = counts[nz]
+                starts = np.concatenate(([0], np.cumsum(cnz)[:-1]))
+                rmin = np.minimum.reduceat(d, starts)
+                e = np.exp(np.repeat(rmin, cnz) - d)
+                w = e / np.repeat(np.add.reduceat(e, starts), cnz)
+                weighted = w * cv[rows]
+                matched = cv[nz]
+            acc_adj += np.bincount(cols, weights=weighted, minlength=n)
+            acc_dist += np.bincount(cols, weights=d, minlength=n)
+            acc_cnt += np.bincount(cols, minlength=n)
+            acc_w += np.bincount(cols, weights=w, minlength=n)
+            tmv += matched.sum()
         mask = acc_cnt > 0
         m = int(mask.sum())
         # nullable id dtype: the sentinel row's null must not coerce an

@@ -61,10 +61,12 @@ class AdjustmentResult:
     summary: DataFrame
     matched_pairs: DataFrame
     #: probes that found no neighbor (non-empty only in radius / percentile
-    #: mode, or when the build side is empty) — the distributed form of the
-    #: reference's per-customer "No matching customers within radius_value"
-    #: warning (nearest_consented_customers.py:178-179). Lazy anti-join;
-    #: count it to surface the diagnostic.
+    #: mode; an empty build side leaves every probe unmatched in radius
+    #: mode, while kNN and percentile mode raise ValueError there) — the
+    #: distributed form of the reference's per-customer "No matching
+    #: customers within radius_value" warning
+    #: (nearest_consented_customers.py:178-179). Lazy anti-join; count it
+    #: to surface the diagnostic.
     unmatched_probes: DataFrame | None = None
 
 
@@ -103,8 +105,10 @@ def run_adjustment(
 
     ``impl="auto"`` (default) resolves the physical join strategy ONCE up
     front via ``choose_impl`` — two count() jobs, then the measured
-    ~30k-probe-row / 128 MB-build-matrix crossover (PERF.md round 11)
-    picks the exact broadcast kernel or the beyond-broadcast LSH route.
+    pair-grid / 128 MB-build-matrix gates (PERF.md rounds 11-12) pick the
+    exact broadcast kernel ("numpy"), the exact dictionary kernel
+    ("grouped", when only the distinct-vector grid fits; two more
+    count-distinct jobs) or the beyond-broadcast LSH route.
     The reference makes the same call inside sklearn
     (``NearestNeighbors(algorithm='auto')``,
     nearest_consented_customers.py:67); here the choice is between

@@ -45,7 +45,7 @@ def _cfg(k):
     )
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
+@pytest.mark.parametrize("impl", ["sql", "numpy", "grouped"])
 def test_golden_k1_single_candidate_absorbs_full_value(spark, impl):
     """k=1, one consenting candidate → it absorbs the full 20.0
     (reference: pipeline_test.py:101-124)."""
@@ -61,7 +61,7 @@ def test_golden_k1_single_candidate_absorbs_full_value(spark, impl):
     assert summary["total_matched_conversion_value"] == pytest.approx(20.0)
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
+@pytest.mark.parametrize("impl", ["sql", "numpy", "grouped"])
 def test_golden_k2_equidistant_split_evenly(spark, impl):
     """k=2 over two equidistant candidates → 10.0 each
     (reference: pipeline_test.py:126-146)."""

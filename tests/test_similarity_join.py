@@ -101,6 +101,68 @@ def test_radius_join_bounds_and_drops_unmatched(spark, impl):
     assert all_pairs.count() == 7 * 11
 
 
+def test_binary_manhattan_shortcut_checks_every_row(spark):
+    """The binary manhattan identity |x−b|₁ = |x|₁ + |b|₁ − 2x·b holds
+    only on 0/1 vectors, so one non-0/1 build row anywhere must switch it
+    off: after 64 one-hot rows, build row 100 = [0, 3] is 2.0 from probe
+    [0, 1] (the identity would say 0.0) and stays outside radius 0.5."""
+    onehots = [(i, [0.0, 1.0] if i % 2 else [1.0, 0.0]) for i in range(64)]
+    build = spark.createDataFrame(onehots + [(100, [0.0, 3.0])], ["bid", "features"])
+    probe = spark.createDataFrame([(0, [0.0, 1.0])], ["pid", "features"])
+
+    def pairs(impl):
+        out = radius_join(probe, build, 0.5, build_id="bid", impl=impl)
+        return sorted((r["bid"], r["distance"]) for r in out.collect())
+
+    from consent_based_conversion_adjustments_spark.operators.similarity_join import (
+        radius_join_lsh,
+    )
+
+    sql = pairs("sql")
+    assert len(sql) == 32 and 100 not in {b for b, _ in sql}
+    assert pairs("numpy") == sql
+    lsh = radius_join_lsh(
+        probe, build, 0.5, 2, probe_id="pid", build_id="bid"
+    ).collect()
+    assert {(r["bid"], r["distance"]) for r in lsh} <= set(sql)
+
+
+@pytest.mark.parametrize("impl", ["numpy", "grouped"])
+def test_radius_join_empty_build_side(spark, impl):
+    """A radius-mode date with no consenting rows matches nothing on
+    every route, as on sql — no worker crash on the empty build matrix."""
+    probe, build = _frames(spark)
+    empty = build.filter(F.lit(False))
+    sql = radius_join(probe, empty, 3.0, build_id="bid", impl="sql")
+    out = radius_join(probe, empty, 3.0, build_id="bid", impl=impl)
+    assert out.count() == sql.count() == 0
+
+
+@pytest.mark.parametrize("impl", ["sql", "numpy", "grouped"])
+def test_percentile_radius_empty_build_side_raises(spark, impl):
+    """Percentile mode has no radius when one side is empty: every route
+    raises ValueError naming the build side instead of a TypeError."""
+    probe, build = _frames(spark)
+    with pytest.raises(ValueError, match="build"):
+        percentile_radius(
+            probe, build.filter(F.lit(False)), 0.9,
+            probe_id="pid", build_id="bid", impl=impl,
+        )
+
+
+def test_percentile_radius_lsh_empty_build_side_raises(spark):
+    from consent_based_conversion_adjustments_spark.operators.similarity_join import (
+        percentile_radius_lsh,
+    )
+
+    probe, build = _frames(spark)
+    with pytest.raises(ValueError, match="build"):
+        percentile_radius_lsh(
+            probe, build.filter(F.lit(False)), 0.9, 5,
+            probe_id="pid", build_id="bid",
+        )
+
+
 def test_resolve_k_proportional_and_errors():
     """reference: nearest_consented_customers.py:145-147, 208-211."""
     assert resolve_k(0.5, 30) == 15
